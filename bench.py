@@ -20,6 +20,37 @@ import pandas as pd  # module-level: pandas_udf type-hint resolution needs it
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 
+def warm(spark, sf_dir: str) -> None:
+    """Warm the JVM, the parquet footer caches and the Arrow/Python worker
+    pool once, so per-query numbers measure the plan, not first-touch
+    session costs (the first pandas-UDF evaluation in a session pays
+    ~5 s of worker startup)."""
+    from pyspark.sql import functions as F
+    from pyspark.sql.functions import pandas_udf
+
+    spark.read.parquet(f"{sf_dir}/events.parquet").count()
+
+    @pandas_udf("double")
+    def _warm(v: pd.Series) -> pd.Series:
+        return v
+
+    spark.range(64).select(_warm(F.col("id").cast("double"))).count()
+
+
+def timed_write(spark, fn, sf_dir: str, out: str) -> float:
+    """Seconds to build ``fn(spark, sf_dir)`` and write it as parquet to
+    ``out`` — the bench's timed region. The query's pins are released on
+    scope exit, OUTSIDE the timed region, so no cached frame squeezes
+    execution memory for later queries or makes their timings
+    order-dependent."""
+    from feature_generation_benchmark_spark.session import cache_scope
+
+    with cache_scope(spark):
+        t0 = time.time()
+        fn(spark, sf_dir).write.mode("overwrite").parquet(out)
+        return round(time.time() - t0, 3)
+
+
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     try:
@@ -36,19 +67,7 @@ def main() -> None:
         name: q.fn for name, q in registry().items() if q.bench
     }
 
-    # warm the JVM + parquet footer caches + Arrow/Python worker pool once so
-    # per-query numbers measure the plan, not first-touch session costs (the
-    # first pandas-UDF evaluation in a session pays ~5 s of worker startup)
-    spark.read.parquet(f"{sf_dir}/events.parquet").count()
-
-    from pyspark.sql import functions as F
-    from pyspark.sql.functions import pandas_udf
-
-    @pandas_udf("double")
-    def _warm(v: pd.Series) -> pd.Series:
-        return v
-
-    spark.range(64).select(_warm(F.col("id").cast("double"))).count()
+    warm(spark, sf_dir)
 
     # single-core burn probe (shared definition: hostprobe.py) recorded
     # into the JSON artifact so every BENCH_r{N} reading carries its own
@@ -81,17 +100,7 @@ def main() -> None:
         pass
 
     def timed(name: str, fn) -> float:
-        out = os.path.join(out_root, name)
-        t0 = time.time()
-        fn(spark, sf_dir).write.mode("overwrite").parquet(out)
-        t = round(time.time() - t0, 3)
-        # drop caches OUTSIDE the timed region: several operators
-        # .cache() intra-query frames (dedup shingles, graph edges) and
-        # no caller unpersists — without this each cached frame stays
-        # pinned for the rest of the run, squeezing execution memory and
-        # making later timings order-dependent (r6 session-3 review)
-        spark.catalog.clearCache()
-        return t
+        return timed_write(spark, fn, sf_dir, os.path.join(out_root, name))
 
     timings: dict[str, float] = {}
     for name, fn in queries.items():

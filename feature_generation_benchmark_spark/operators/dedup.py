@@ -16,13 +16,10 @@ pairwise Jaccard is provided as the small-scale oracle-checkable baseline;
 MinHash/LSH is the 100 TB path.
 
 Storage contract (same as ``graph.pagerank``): the shingle/signature
-frames these operators ``.cache()`` are REFERENCED MULTIPLE TIMES inside
-one returned plan and stay pinned for the session once materialized —
-a long-lived session interleaving many dedup queries should call
-``spark.catalog.clearCache()`` (or unpersist via ``spark.sparkContext``)
-between workloads; the cache is an executor-storage trade the CALLER
-owns, not a leak the operator can release itself (the plan is lazy —
-unpersisting before consumption would defeat the reuse).
+frames these operators ``.cache()`` are read more than once by one
+returned plan, so they must stay pinned until the caller's action runs.
+The caller releases them by consuming the result inside
+``session.cache_scope``.
 """
 
 from __future__ import annotations
@@ -170,20 +167,17 @@ def ngram_jaccard_pairs(
         alpha = F.ceil(F.lit(threshold) * F.col("n_shingles") - F.lit(1e-9))
         # persist: prefix feeds BOTH sides of the candidate self-join —
         # without the cut the window sort above it executes twice (the
-        # dominant 100× probe cost). Storage level (env-overridable
-        # SPARK_GRAFT_PREFIX_STORAGE): r7 chose DISK_ONLY from a one-box
-        # A/B on the OLD (distribution-distorted) probe fixture where
-        # MEMORY_AND_DISK read 40% slower; r8 re-validated on the
-        # faithful 100× fixture under a HALVED unified pool (12 GB — the
-        # shared-executor-pool emulation the r7 verdict asked for):
+        # dominant 100× probe cost). Storage level: r7 chose DISK_ONLY
+        # from a one-box A/B on the OLD (distribution-distorted) probe
+        # fixture where MEMORY_AND_DISK read 40% slower; r8 re-validated
+        # on the faithful 100× fixture under a HALVED unified pool (12 GB
+        # — the shared-executor-pool emulation the r7 verdict asked for):
         # MEMORY_AND_DISK (PySpark = serialized blocks) 116.5/96.6 s vs
         # DISK_ONLY 129.0/125.2 s interleaved — ~17% faster, and at
         # sf0.1 the two are within noise (3.44 vs 3.19 / 4.14 vs 4.51
         # medians-of-5 across the two prefix consumers). Serialized
         # in-memory blocks spill to disk under pressure anyway, so
-        # MEMORY_AND_DISK dominates: it is the r8 default.
-        import os as _os
-
+        # MEMORY_AND_DISK dominates.
         from pyspark import StorageLevel
 
         prefix = (
@@ -191,14 +185,7 @@ def ngram_jaccard_pairs(
                 F.col("__pos") <= F.col("n_shingles") - alpha + F.lit(1)
             )
             .select(F.col(id_col), "shingle", "__pos", "n_shingles")
-            .persist(
-                getattr(
-                    StorageLevel,
-                    _os.environ.get(
-                        "SPARK_GRAFT_PREFIX_STORAGE", "MEMORY_AND_DISK"
-                    ),
-                )
-            )
+            .persist(StorageLevel.MEMORY_AND_DISK)
         )
         a_src = prefix
         if new_ids is not None:
@@ -585,65 +572,57 @@ def lsh_candidate_pairs(
     return _banded_candidate_pairs(signatures, id_col, band_cols)
 
 
-def minhash_dedup_pairs(
+def shingle_arrays(
     df: DataFrame,
     id_col: str,
     text_col: str,
     n: int = 3,
+    hash_fn: str = "xxhash64",
+) -> DataFrame:
+    """(id, __arr): each doc's sorted distinct word-``n``-gram shingles —
+    xxhash64 ids, or the raw strings with ``hash_fn="md5"`` (every stage
+    then reproducible in DuckDB SQL). Docs with fewer than ``n`` tokens
+    have no shingle and no row. This is the one corpus pass of the
+    MinHash pipeline; :func:`minhash_pairs` reads it three times, so pin
+    it (``.cache()``) before passing it there."""
+    sh = doc_shingles(df, id_col, text_col, n)
+    if hash_fn != "md5":
+        sh = sh.select(F.col(id_col), F.xxhash64("shingle").alias("shingle"))
+    return sh.groupBy(id_col).agg(
+        F.array_sort(F.collect_list("shingle")).alias("__arr")
+    )
+
+
+def minhash_pairs(
+    arrs: DataFrame,
+    id_col: str,
     num_perm: int = 64,
     bands: int = 16,
     threshold: float = 0.5,
     hash_fn: str = "xxhash64",
-    internals: dict | None = None,
 ) -> DataFrame:
-    """Full MinHash-LSH near-dup pipeline: shingle → signature → banded
-    candidates → EXACT Jaccard verification of candidates only.
-
-    Output schema matches :func:`ngram_jaccard_pairs`; at any scale the
-    candidate set (not n²) bounds the verification join. ``hash_fn="md5"``
-    keeps raw shingle strings (no xxhash64 pre-hash) so every stage is
-    reproducible in DuckDB SQL.
-
-    ``internals`` (optional out-param, r8): receives the pipeline's
-    CACHED doc-sized frames — ``"arrs"``, the per-doc sorted shingle
-    array table (one row per doc with ≥ 1 ``n``-gram, i.e. ≥ ``n``
-    tokens) — so gating wrappers can derive eligibility from the SAME
-    cached corpus pass instead of re-tokenizing the corpus.
-    """
-    sh = doc_shingles(df, id_col, text_col, n)
-    if hash_fn != "md5":
-        sh = sh.select(F.col(id_col), F.xxhash64("shingle").alias("shingle"))
-    sh = sh.cache()
+    """MinHash-LSH near-dup pairs from a pinned :func:`shingle_arrays`
+    frame: signature → banded candidates → EXACT Jaccard verification of
+    candidates only. Output schema matches :func:`ngram_jaccard_pairs`;
+    at any scale the candidate set (not n²) bounds the verification
+    join."""
+    sh = arrs.select(F.col(id_col), F.explode("__arr").alias("shingle"))
     # cache the DOC-sized signature table: the banding self-join below
     # references the signature subtree on both sides and ReuseExchange
     # does not fire across the BroadcastExchange side, so without the
     # cache the corpus-sized 64-min aggregation executes TWICE per run
     # (seen in the captured plan: two HashAggregate[64 mins] pairs over
-    # the same InMemoryTableScan). One row of 65 longs per doc — smaller
-    # than the sh cache that already anchors this pipeline (r7).
+    # the same InMemoryTableScan). One row of 65 longs per doc (r7).
     sig = minhash_signatures(sh, id_col, num_perm, hash_fn=hash_fn).cache()
     cand = lsh_candidate_pairs(sig, id_col, num_perm, bands, hash_fn=hash_fn)
 
     # verify against the FULL sets as per-doc shingle ARRAYS (the same
-    # r7 rewrite the prefix path carries): the exploded form shuffled the
-    # whole shingle index twice (join on id_a, then on (id_b, shingle))
-    # plus a separate per-doc sizes aggregate + two pair-table joins;
-    # here ONE collect_list agg builds the doc-side array table, the
-    # candidate list joins it twice (AQE broadcasts it when small), and
-    # common/na/nb all read off the arrays JVM-side. Identical output:
-    # doc_shingles is distinct per doc, so |array_intersect| == the
-    # exploded join's per-pair count, and a zero-common candidate is
-    # dropped by the same jaccard >= threshold filter that dropped its
-    # absent row before (threshold > 0 by contract).
-    # cache the DOC-sized array table too: the verify joins reference it
-    # on both pair sides and each side otherwise re-runs the collect_list
-    # aggregation over the cached sh (two ObjectHashAggregate pairs in
-    # the captured plan) (r7).
-    arrs = sh.groupBy(id_col).agg(
-        F.array_sort(F.collect_list("shingle")).alias("__arr")
-    ).cache()
-    if internals is not None:
-        internals["arrs"] = arrs
+    # r7 rewrite the prefix path carries): the candidate list joins the
+    # array table twice (AQE broadcasts it when small), and common/na/nb
+    # all read off the arrays JVM-side. The arrays are distinct per doc,
+    # so |array_intersect| is the shared-shingle count, and a
+    # zero-common candidate is dropped by the jaccard >= threshold
+    # filter (threshold > 0 by contract).
     common = (
         cand.join(
             arrs.select(
@@ -667,6 +646,22 @@ def minhash_dedup_pairs(
         .filter(F.col("common") > 0)
     )
     return _jaccard_threshold(common, threshold)
+
+
+def minhash_dedup_pairs(
+    df: DataFrame,
+    id_col: str,
+    text_col: str,
+    n: int = 3,
+    num_perm: int = 64,
+    bands: int = 16,
+    threshold: float = 0.5,
+    hash_fn: str = "xxhash64",
+) -> DataFrame:
+    """Full MinHash-LSH near-dup pipeline over raw text:
+    :func:`shingle_arrays`, pinned, into :func:`minhash_pairs`."""
+    arrs = shingle_arrays(df, id_col, text_col, n, hash_fn=hash_fn).cache()
+    return minhash_pairs(arrs, id_col, num_perm, bands, threshold, hash_fn)
 
 
 # ---------------------------------------------------------------------------
@@ -702,7 +697,11 @@ def simhash_bits(
     Arrow-batched numpy pass — a 64-column conditional-sum hash aggregate
     over exploded tokens costs ~|tokens|×64 codegen branches plus a
     shuffle, the vectorized tally is embarrassingly parallel per batch.
-    Docs with zero tokens are excluded (parity with the explode form).
+    Docs with zero tokens are excluded (parity with the explode form):
+    the tally returns null for them and the filter runs on its output.
+    The tally is marked nondeterministic so Catalyst keeps that filter
+    above it; pushed below, the filter would re-run the tally (or, on the
+    token array, the tokenizer) for every doc.
 
     ``hash_fn="md5"`` swaps the per-token sign hash for the first 64 bits
     of md5 — bit-identical in DuckDB, making the whole pipeline
@@ -717,12 +716,16 @@ def simhash_bits(
 
     @pandas_udf("array<long>")
     def _bands(hs: pd.Series) -> pd.Series:
-        arrs = hs.to_numpy()
+        all_arrs = hs.to_numpy()
+        has_toks = np.fromiter(
+            (len(a) > 0 for a in all_arrs), dtype=bool, count=len(all_arrs)
+        )
+        if not has_toks.any():
+            return pd.Series([None] * len(all_arrs), dtype=object)
+        arrs = all_arrs[has_toks]
         lens = np.fromiter(
             (len(a) for a in arrs), dtype=np.int64, count=len(arrs)
         )
-        if len(arrs) == 0 or lens.sum() == 0:
-            return pd.Series([np.zeros(n_bands, dtype=np.int64)] * len(arrs))
         flat = np.concatenate(arrs).astype(np.int64).view(np.uint64)
         starts = np.zeros(len(arrs), dtype=np.int64)
         np.cumsum(lens[:-1], out=starts[1:])
@@ -734,51 +737,45 @@ def simhash_bits(
         out = np.empty((len(arrs), n_bands), dtype=np.int64)
         for band in range(n_bands):
             out[:, band] = bit_set[:, band * 16:(band + 1) * 16] @ weights
-        return pd.Series(list(out))
+        rows = iter(out)
+        return pd.Series(
+            [next(rows) if t else None for t in has_toks], dtype=object
+        )
+
+    _bands = _bands.asNondeterministic()
 
     if hash_fn == "md5":
         hash_expr = F.expr(_MD5_PACK64)
     else:
         hash_expr = F.transform("__toks", lambda t: F.xxhash64(t))
-    hashed = (
-        df.select(F.col(id_col), tokens(text_col).alias("__toks"))
-        .filter(F.size("__toks") > 0)
-        .select(F.col(id_col), hash_expr.alias("__hs"))
+    hashed = df.select(
+        F.col(id_col), tokens(text_col).alias("__toks")
+    ).select(F.col(id_col), hash_expr.alias("__hs"))
+    banded = hashed.select(F.col(id_col), _bands("__hs").alias("__b")).filter(
+        F.col("__b").isNotNull()
     )
-    banded = hashed.select(F.col(id_col), _bands("__hs").alias("__b"))
     return banded.select(
         F.col(id_col),
         *[F.col("__b")[i].alias(f"sh_band_{i}") for i in range(n_bands)],
     )
 
 
-def simhash_dup_pairs(
-    df: DataFrame,
-    id_col: str,
-    text_col: str,
-    max_hamming: int = 3,
-    hash_fn: str = "xxhash64",
-    internals: dict | None = None,
+def simhash_pairs(
+    bits: DataFrame, id_col: str, max_hamming: int = 3
 ) -> DataFrame:
     """Near-dup pairs with SimHash hamming distance ≤ ``max_hamming``
-    (≤ 3 with 4×16-bit bands ⇒ candidate recall is exact by pigeonhole).
-
-    ``internals`` (optional out-param, r8): receives ``"bits"``, the
-    CACHED doc-sized band table (one row per doc with ≥ 1 token), so
-    gating wrappers can derive eligibility from the same cached corpus
-    pass instead of re-tokenizing."""
-    sh = simhash_bits(df, id_col, text_col, hash_fn=hash_fn).cache()
-    if internals is not None:
-        internals["bits"] = sh
+    (≤ 3 with 4×16-bit bands ⇒ candidate recall is exact by pigeonhole)
+    from a pinned :func:`simhash_bits` frame, which the candidate and
+    verify joins read three times."""
     n_bands = 4
     cand = _banded_candidate_pairs(
-        sh, id_col, [F.col(f"sh_band_{b}") for b in range(n_bands)]
+        bits, id_col, [F.col(f"sh_band_{b}") for b in range(n_bands)]
     )
-    sa = sh.select(
+    sa = bits.select(
         F.col(id_col).alias("id_a"),
         *[F.col(f"sh_band_{i}").alias(f"a_{i}") for i in range(n_bands)],
     )
-    sb = sh.select(
+    sb = bits.select(
         F.col(id_col).alias("id_b"),
         *[F.col(f"sh_band_{i}").alias(f"b_{i}") for i in range(n_bands)],
     )
@@ -792,3 +789,16 @@ def simhash_dup_pairs(
         .select("id_a", "id_b", hamming.cast("long").alias("hamming"))
         .filter(F.col("hamming") <= F.lit(max_hamming))
     )
+
+
+def simhash_dup_pairs(
+    df: DataFrame,
+    id_col: str,
+    text_col: str,
+    max_hamming: int = 3,
+    hash_fn: str = "xxhash64",
+) -> DataFrame:
+    """SimHash near-dup pipeline over raw text: :func:`simhash_bits`,
+    pinned, into :func:`simhash_pairs`."""
+    bits = simhash_bits(df, id_col, text_col, hash_fn=hash_fn).cache()
+    return simhash_pairs(bits, id_col, max_hamming)

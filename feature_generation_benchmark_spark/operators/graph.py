@@ -17,8 +17,9 @@ connected bipartite graphs this engine builds.
 
 Scale posture: one shuffle per iteration pair (join scores→edges on src,
 re-agg on dst); the iteration count is a compile-time constant so the
-whole K-round program is ONE lazy plan. Edges and degrees are computed
-once and cached by the caller if reused.
+whole K-round program is built up front. Building it runs jobs: the node
+count, and each round's ``localCheckpoint`` (with AQE on, even a
+non-eager checkpoint executes the shuffle stages below it).
 """
 
 from __future__ import annotations
@@ -38,14 +39,15 @@ def pagerank(
     small_state: bool = False,
 ) -> DataFrame:
     """(src, dst) int64 edge list → (node, score_e9) after ``iterations``
-    integer-quantized power steps from a uniform start.
+    integer-quantized power steps from a uniform start. An empty edge list
+    gives an empty result.
 
     ``small_state=True`` declares the NODE space dim-sized (even when the
     edge list is huge — e.g. customers×suppliers trade graphs): per-node
     state (scores, degrees, in-mass) is broadcast into the edge-side joins
-    and each iteration's scores are ``localCheckpoint``ed. That leaves ONE
-    shuffle per iteration (the in-mass re-aggregation over edges) and caps
-    lineage depth at one step, instead of three shuffle joins per
+    and every second round's scores are ``localCheckpoint``ed. That leaves
+    ONE shuffle per iteration (the in-mass re-aggregation over edges) and
+    caps lineage depth at two steps, instead of three shuffle joins per
     iteration over an ever-deeper plan. For web-scale node spaces leave it
     False: state then stays partitioned and every join is a hash shuffle —
     the horizontally-scaling posture.
@@ -59,9 +61,8 @@ def pagerank(
     # loop invariants, each read once per iteration: cache so the K-round
     # plan re-reads a materialized RDD instead of recomputing the
     # distinct/agg subtrees K times (and the lineage stays shallow).
-    # They must stay cached until the CALLER's action runs, so cleanup is
-    # the caller's: unpersist via spark.catalog.clearCache() (or let LRU
-    # eviction handle it) once the result is materialized.
+    # They must stay cached until the CALLER's action runs, so the caller
+    # releases them by consuming the result inside session.cache_scope.
     nodes = (
         e.select(F.col("src").alias("node"))
         .union(e.select(F.col("dst").alias("node")))
@@ -76,6 +77,8 @@ def pagerank(
     # instead of a per-row `n` column carried through a crossJoin (r8,
     # guide §2.4 — the crossJoin base frame and its cache disappear)
     n = nodes.count()
+    if n == 0:
+        return nodes.select("node", F.lit(0).cast("long").alias("score_e9"))
     d = damping_pct
     teleport = ((100 - d) * SCALE) // (100 * n)  # == (100−d)·1e9 div 100·n
     # all-nodes zero-contribution rows: unioned into each iteration's
@@ -112,7 +115,7 @@ def pagerank(
                 " AS score_e9",
             )
         )
-        # lazy checkpoint every SECOND round (r8): every scores_i has
+        # checkpoint every SECOND round (r8): every scores_i has
         # exactly one consumer (round i+1's state join), so nothing is
         # recomputed at any cadence — the cadence only trades the
         # number of separate analyzed/optimized/AQE'd sub-executions
@@ -155,18 +158,18 @@ def bfs_hops(
     (this engine's use) the dropped per-level pruning is strictly
     cheaper. Frontiers are NODE-sized; with ``small_state=True`` they
     broadcast into the edge-side join, leaving one shuffle per hop (the
-    dedup agg). Each level is LAZILY ``localCheckpoint``ed: a level
-    feeds two consumers (the next level's broadcast build and the final
-    fold), so the pin makes the level's edge probe run once — but with
-    ``eager=False`` no per-level ACTION runs; the whole K-level program
-    is ONE Catalyst pipeline executed by the caller's single action (r8
-    — the old per-level ``isEmpty`` early-exit forced K driver actions;
-    on a dead-end graph the redundant tail levels it skipped are now
-    empty-frontier joins that AQE collapses via empty-relation
-    propagation, and the fold is unchanged either way). For web-scale
-    node spaces set ``small_state=False``: state then stays
-    hash-partitioned on the node key and every join/dedup shuffles —
-    the horizontally-scaling posture.
+    dedup agg). Each level is ``localCheckpoint``ed: a level feeds two
+    consumers (the next level's broadcast build and the final fold), so
+    the pin makes the level's edge probe run once, and it caps plan
+    depth at one level. With AQE on, each checkpoint runs the level's
+    shuffle stage while the program is built (``eager=False`` defers
+    only the final stage); no ``isEmpty`` early exit runs (r8 — on a
+    dead-end graph the redundant tail levels are empty-frontier joins
+    that AQE collapses via empty-relation propagation, and the fold is
+    unchanged either way). For web-scale node spaces set
+    ``small_state=False``: state then stays hash-partitioned on the node
+    key and every join/dedup shuffles — the horizontally-scaling
+    posture.
     """
     if max_hops < 0:
         raise ValueError("max_hops must be >= 0")
@@ -180,7 +183,7 @@ def bfs_hops(
     )
     src_level = spark.createDataFrame(
         [(int(s),) for s in dict.fromkeys(sources)], "node long"
-    ).localCheckpoint(eager=False)
+    )
     levels = [src_level.select("node", F.lit(0).cast("int").alias("hop"))]
     frontier = src_level
     for h in range(1, max_hops + 1):

@@ -199,11 +199,6 @@ def interval_join(
     )
 
 
-def semi_join(left: DataFrame, right: DataFrame, on) -> DataFrame:
-    """Keep left rows with at least one key match on the right."""
-    return left.join(right, on=on, how="left_semi")
-
-
 def anti_join(left: DataFrame, right: DataFrame, on) -> DataFrame:
     """Keep left rows with NO key match on the right."""
     return left.join(right, on=on, how="left_anti")

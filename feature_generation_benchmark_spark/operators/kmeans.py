@@ -21,12 +21,14 @@ Each iteration is:
                 which is what lets a SQL twin replay training exactly.
 
 Iteration state: nothing is ever collected to the driver — the k-row
-model is lazily ``localCheckpoint``ed each iteration, cutting the lineage
-that would otherwise re-execute every earlier iteration inside each
-broadcast job (quadratic in ``n_iter``) while keeping plan construction
-job-free. Scale posture: assignment is a zero-shuffle broadcast of a
-1-row model frame; the update's exchange carries at most P×k×d map-side
-(sum, count) partials per iteration — independent of corpus row count.
+model is ``localCheckpoint``ed each iteration, cutting the lineage that
+would otherwise re-execute every earlier iteration inside each broadcast
+job (quadratic in ``n_iter``). With AQE on, each checkpoint runs that
+iteration's update shuffle while the program is built, so building the
+model runs about one job per iteration. Scale posture: assignment is a
+zero-shuffle broadcast of a 1-row model frame; the update's exchange
+carries at most P×k×d map-side (sum, count) partials per iteration —
+independent of corpus row count.
 
 Reference scope: the reference benchmark has no iterative operator; this is
 a north-star extension (SURVEY §7.2) exercising multi-round plan
@@ -158,11 +160,11 @@ def kmeans_train(
         # Cut the k-row model's lineage — without this, iteration i's
         # broadcast-model job re-executes the FULL lineage of iterations
         # 1..i-1 (quadratic corpus passes in n_iter); with it each update
-        # runs exactly once. eager=False keeps plan construction lazy
-        # (A/B: same win as eager; the checkpoint materializes inside the
-        # first broadcast job that needs it and is reused after). Values
-        # are identical either way — the per-iteration quantization fixed
-        # the trajectory, so the unrolled-CTE oracle is unaffected.
+        # runs exactly once. eager=False only defers the final stage: with
+        # AQE on, the update's shuffle stage still runs here (A/B: same
+        # win as eager). Values are identical either way — the
+        # per-iteration quantization fixed the trajectory, so the
+        # unrolled-CTE oracle is unaffected.
         cents = _update(assigned).localCheckpoint(eager=False)
     final = _assign(corpus, cents)
     d2 = (

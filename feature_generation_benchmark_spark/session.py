@@ -99,37 +99,58 @@ def default_parallelism() -> int:
     return int(os.environ.get("SPARK_GRAFT_CPUS", os.cpu_count() or 8))
 
 
+def _cache_entries(spark: SparkSession) -> list:
+    """The session's CacheManager entries (``CachedData``), newest first.
+
+    Spark 4.1 exposes ``numCachedEntries``, ``lookupCachedData`` and
+    ``uncacheQuery`` but no listing, so this reads the manager's private
+    ``cachedData`` field by reflection."""
+    cm = spark._jsparkSession.sharedState().cacheManager()
+    field = cm.getClass().getDeclaredField("cachedData")
+    field.setAccessible(True)
+    seq = field.get(cm)
+    return [seq.apply(i) for i in range(seq.size())]
+
+
 @contextmanager
 def cache_scope(spark: SparkSession):
-    """Release storage pinned INSIDE the scope when it exits (r8, r7
-    verdict #8 — cache hygiene for library consumers).
+    """Release the storage a query pins; the one release path.
 
-    Several query functions ``.cache()``/``localCheckpoint`` intra-query
-    frames that are referenced multiple times within one returned plan;
-    the pins must survive until the consumer's action runs, so the query
-    function itself can never release them. A consumer running queries
-    in sequence should therefore wrap each consume:
+    A query function ``.cache()``s a frame its returned plan reads two or
+    more times, and iterative operators ``localCheckpoint`` to cut plan
+    depth. Those pins must outlive the function (the caller's action reads
+    them), so the caller releases them by consuming inside a scope:
 
         with cache_scope(spark):
             df = queries["funnel_conversions"](spark, sf_dir)
             df.collect()          # caches materialize here
-        # exit: every RDD pinned inside the scope is unpersisted
+        # exit: the cache and the pinned RDDs are back to their entry state
 
-    Exit snapshots ``getPersistentRDDs`` against entry and unpersists
-    only the NEW ids — storage cached before the scope is untouched.
-    Do not reuse a scope's DataFrames after exit (their caches and
-    localCheckpoints are gone). ``bench.py`` achieves the same with a
-    whole-session ``spark.catalog.clearCache()`` between queries, which
-    it can because it owns the session.
+    On exit every CacheManager entry added inside the scope is removed
+    with ``uncacheQuery`` (so re-running the same query in a later scope
+    caches again instead of finding a stale entry), then every RDD
+    persisted inside the scope (``localCheckpoint`` blocks) is
+    unpersisted. Entries and RDDs that existed at entry are untouched. Do
+    not reuse a scope's DataFrames after exit.
     """
+    jvm = spark.sparkContext._jvm
     jsc = spark.sparkContext._jsc
-    before = set(jsc.getPersistentRDDs().keySet().toArray())
+    before_rdds = set(jsc.getPersistentRDDs().keySet().toArray())
+    before_entries = jvm.java.util.IdentityHashMap()
+    for entry in _cache_entries(spark):
+        before_entries.put(entry, True)
     try:
         yield spark
     finally:
+        cm = spark._jsparkSession.sharedState().cacheManager()
+        # newest first: a cached frame built on another new one goes
+        # before its input, so no removal re-plans a doomed entry
+        for entry in _cache_entries(spark):
+            if not before_entries.containsKey(entry):
+                cm.uncacheQuery(spark._jsparkSession, entry.plan(), False, False)
         pinned = jsc.getPersistentRDDs()
         for rdd_id in pinned.keySet().toArray():
-            if rdd_id not in before:
+            if rdd_id not in before_rdds:
                 rdd = pinned.get(rdd_id)
                 if rdd is not None:
                     rdd.unpersist(False)
@@ -185,14 +206,9 @@ def get_spark(
         # bucket_pivot at 1.2B rows: 808 s at 32 partitions vs 634 s at
         # 256 — per-task spill was the bottleneck), while AQE merges the
         # excess away for small stages at no measurable cost.
-        # (factor overridable via SPARK_GRAFT_INIT_PARTITION_FACTOR for
-        # A/B probes; 8 is the measured volume-sized default)
         .config(
             "spark.sql.adaptive.coalescePartitions.initialPartitionNum",
-            str(
-                cores
-                * int(os.environ.get("SPARK_GRAFT_INIT_PARTITION_FACTOR", "8"))
-            ),
+            str(cores * 8),
         )
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
         # AQE coalescing floor (r7 plan audit): with parallelismFirst
@@ -206,11 +222,8 @@ def get_spark(
         # 256k 31.1 s — dedup_jaccard_incremental alone 12.5 → 5.5 s.
         # 256k only lowers the floor: stages whose bytes/parallelism
         # exceed it (any real at-scale shuffle) coalesce exactly as
-        # before, so the knob is scale-neutral, and overridable for A/Bs.
-        .config(
-            "spark.sql.adaptive.coalescePartitions.minPartitionSize",
-            os.environ.get("SPARK_GRAFT_MIN_PARTITION_SIZE", "256k"),
-        )
+        # before, so the floor is scale-neutral.
+        .config("spark.sql.adaptive.coalescePartitions.minPartitionSize", "256k")
         # Let AQE right-size CACHED plans too: by default Spark pins a
         # cache's output partitioning (uncoalesced, e.g. 256-1024 tiny
         # partitions for a dim-sized distinct), and every downstream pass

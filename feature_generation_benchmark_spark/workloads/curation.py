@@ -178,13 +178,13 @@ def dup_ngram_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
     base = toked.select(
         "doc_id", F.size("toks").cast("long").alias("n_tokens")
     )
-    # lazy localCheckpoint: the exploded n-gram frame feeds the dup-gram
-    # model AND the hits join — without the cut the corpus
-    # tokenize+ngram+posexplode runs twice (r7; the ccnet precedent)
+    # cached: the exploded n-gram frame feeds the dup-gram model AND the
+    # hits join — unpinned, the corpus tokenize+ngram+posexplode runs
+    # twice
     ngs = toked.select(
         "doc_id",
         F.posexplode(word_ngrams(F.col("toks"), _DUP_N)).alias("pos", "ng"),
-    ).localCheckpoint(eager=False)
+    ).cache()
     dup = (
         ngs.groupBy("ng")
         .agg(F.count(F.lit(1)).alias("ng_count"))

@@ -15,10 +15,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from feature_generation_benchmark_spark.functions.textfns import (
-    fingerprint_md5,
-    tokens,
-)
+from feature_generation_benchmark_spark.functions.textfns import fingerprint_md5
 from feature_generation_benchmark_spark.operators.clustering import (
     connected_components,
 )
@@ -27,8 +24,12 @@ from feature_generation_benchmark_spark.operators.dedup import (
     decontamination_flags,
     exact_dedup,
     minhash_dedup_pairs,
+    minhash_pairs,
     ngram_jaccard_pairs,
+    shingle_arrays,
+    simhash_bits,
     simhash_dup_pairs,
+    simhash_pairs,
 )
 from feature_generation_benchmark_spark.operators.similarity import (
     cosine_dup_pairs_blocked,
@@ -515,32 +516,21 @@ def _with_planted_clones(docs: DataFrame) -> DataFrame:
     return docs.select("doc_id", "text").unionByName(clones)
 
 
-def _exact_dup_pairs(
-    corpus: DataFrame, min_toks: int, eligible_ids: DataFrame | None = None
-) -> DataFrame:
+def _exact_dup_pairs(corpus: DataFrame, eligible_ids: DataFrame) -> DataFrame:
     """(id_a, id_b) pairs of byte-identical documents that are ELIGIBLE
-    for the hashed pipeline under test (≥ ``min_toks`` tokens — docs too
-    short to shingle/simhash can never appear in its output). Identical
-    text ⇒ identical shingle/token multisets ⇒ the pipeline must emit
-    the pair deterministically; this is the cheap in-plan recall anchor
-    the gated raw entries hash cross-engine.
+    for the hashed pipeline under test — docs too short to
+    shingle/simhash can never appear in its output. Identical text ⇒
+    identical shingle/token multisets ⇒ the pipeline must emit the pair
+    deterministically; this is the cheap in-plan recall anchor the
+    gated raw entries hash cross-engine.
 
-    ``eligible_ids`` (r8, guide §2.4 — share the corpus pass between
-    artifact and proof twin): the pipeline's own CACHED doc-dim frame of
-    ids that survived its tokenize/shingle stage. Eligibility there is
-    by construction the same predicate (present ⟺ ≥ ``min_toks``
-    tokens: simhash keeps docs with ≥ 1 token; an ``n``-gram exists ⟺
-    ≥ ``n`` tokens), so a semi-join against it replaces this twin's own
-    corpus-sized regex re-tokenization — the md5 fingerprint pass is
-    the only corpus work the twin still does."""
-    if eligible_ids is not None:
-        fp = corpus.join(
-            eligible_ids.select("doc_id"), "doc_id", "left_semi"
-        ).select("doc_id", F.md5("text").alias("__f"))
-    else:
-        fp = corpus.filter(
-            F.size(tokens("text")) >= min_toks
-        ).select("doc_id", F.md5("text").alias("__f"))
+    ``eligible_ids`` is the pipeline's own pinned doc-sized frame (one
+    row per doc that survived its tokenize/shingle stage), so this twin
+    never re-tokenizes the corpus: its only corpus work is the md5
+    fingerprint pass."""
+    fp = corpus.join(
+        eligible_ids.select("doc_id"), "doc_id", "left_semi"
+    ).select("doc_id", F.md5("text").alias("__f"))
     # pair generation via ONE groupBy(fingerprint) instead of the fp⋈fp
     # self-join: the join referenced the fp subtree twice, so the corpus
     # (itself a 2-leg union) was scanned and regex-tokenized FOUR times
@@ -610,26 +600,18 @@ def dedup_minhash_lsh_raw_gated(
     on an identically-shaped pipeline is ``dedup_minhash_md5``."""
     docs = load_table(spark, sf_dir, "documents")
     corpus = _with_planted_clones(docs)
-    # lazy localCheckpoint: the pair list feeds two aggregates below —
-    # without the cut the whole LSH pipeline would run twice
-    internals: dict = {}
-    xx = minhash_dedup_pairs(
-        corpus,
-        "doc_id",
-        "text",
-        n=3,
-        num_perm=64,
-        bands=16,
-        threshold=_JACCARD_T,
-        internals=internals,
-    ).localCheckpoint(eager=False)
-    # eligibility (≥ _MIN_SHINGLE_TOKS tokens ⟺ ≥ 1 3-gram shingle ⟺
-    # present in the pipeline's cached per-doc array table): read it off
-    # that cache instead of re-tokenizing the corpus (r8, twin ≤30%-
-    # over-artifact goal — the twin's only corpus pass left is the md5)
-    dup = _exact_dup_pairs(
-        corpus, _MIN_SHINGLE_TOKS, eligible_ids=internals["arrs"]
-    )
+    # the per-doc shingle arrays are the one corpus pass: the pair
+    # pipeline reads them and so does the eligibility semi-join
+    # (≥ _MIN_SHINGLE_TOKS tokens ⟺ ≥ 1 3-gram shingle ⟺ a row)
+    arrs = shingle_arrays(
+        corpus, "doc_id", "text", n=_MIN_SHINGLE_TOKS
+    ).cache()
+    # cached: the pair list feeds two aggregates below — unpinned, the
+    # whole LSH pipeline would run twice
+    xx = minhash_pairs(
+        arrs, "doc_id", num_perm=64, bands=16, threshold=_JACCARD_T
+    ).cache()
+    dup = _exact_dup_pairs(corpus, arrs)
     z = F.lit(0)
     caught = dup.join(xx, ["id_a", "id_b"], "left").agg(
         F.coalesce(F.count(F.lit(1)), z).alias("n_exact_dup_pairs"),
@@ -793,13 +775,12 @@ def dedup_simhash_raw_gated(spark: SparkSession, sf_dir: str) -> DataFrame:
     ``dedup_simhash_md5`` (votes, banding and hamming all pinned)."""
     docs = load_table(spark, sf_dir, "documents")
     corpus = _with_planted_clones(docs)
-    internals: dict = {}
-    xx = simhash_dup_pairs(
-        corpus, "doc_id", "text", max_hamming=3, internals=internals
-    ).localCheckpoint(eager=False)
-    # eligibility (≥ 1 token ⟺ present in the pipeline's cached band
-    # table): read it off that cache instead of re-tokenizing (r8)
-    dup = _exact_dup_pairs(corpus, 1, eligible_ids=internals["bits"])
+    # the band table is the one corpus pass: the pair pipeline reads it
+    # and so does the eligibility semi-join (≥ 1 token ⟺ a row)
+    bits = simhash_bits(corpus, "doc_id", "text").cache()
+    # cached: the pair list feeds two aggregates below
+    xx = simhash_pairs(bits, "doc_id", max_hamming=3).cache()
+    dup = _exact_dup_pairs(corpus, bits)
     z = F.lit(0)
     caught = dup.join(xx, ["id_a", "id_b"], "left").agg(
         F.coalesce(F.count(F.lit(1)), z).alias("n_exact_dup_pairs"),

@@ -44,14 +44,13 @@ _HH_K = 5  # heavy hitters kept per event type
 
 def tfidf_top_terms(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents")
-    # lazy localCheckpoint: tf feeds the document-frequency aggregate AND
-    # the scoring join — without the cut the corpus tokenize+explode+agg
-    # runs twice (r7 optimization; the ccnet/bigram_logprob precedent)
+    # cached: tf feeds the document-frequency aggregate AND the scoring
+    # join — unpinned, the corpus tokenize+explode+agg runs twice
     tf = (
         docs.select("doc_id", F.explode(tokens("text")).alias("term"))
         .groupBy("doc_id", "term")
         .agg(F.count(F.lit(1)).alias("tf"))
-        .localCheckpoint(eager=False)
+        .cache()
     )
     df = tf.groupBy("term").agg(F.count(F.lit(1)).alias("df"))
     n_docs = docs.agg(F.count(F.lit(1)).alias("n_docs"))

@@ -289,10 +289,10 @@ def supplier_bfs_hops(spark: SparkSession, sf_dir: str) -> DataFrame:
     distance = 2 hops via a shared customer).
 
     Plan: `operators/graph.py::bfs_hops` — per level ONE fact-sized
-    equi-join (edges x broadcast frontier) + one dedup shuffle; visited
+    equi-join (edges x broadcast frontier) + one dedup shuffle; frontier
     state is node-sized and broadcast; each level localCheckpoints so the
-    K-level program never replays lineage. Early-exits on frontier
-    exhaustion.
+    K-level program never replays lineage. No early exit: all 4 levels
+    are built.
     """
     from feature_generation_benchmark_spark.session import ensure_runtime_confs
 

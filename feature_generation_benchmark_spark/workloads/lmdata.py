@@ -107,12 +107,12 @@ def ccnet_perplexity_buckets(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.slice("t", 2, F.size("t") - 1),
         lambda a, b: F.struct(a.alias("w1"), b.alias("w2")),
     )
-    # lazy localCheckpoint: the exploded bigram frame feeds the bigram
-    # model, the context model AND the scoring join — without the cut
-    # the corpus explode runs three times (r6 advice)
+    # cached: the exploded bigram frame feeds the bigram model, the
+    # context model AND the scoring join — unpinned, the corpus explode
+    # runs three times
     bg = toks.select("doc_id", F.explode(pairs).alias("p")).select(
         "doc_id", "p.w1", "p.w2"
-    ).localCheckpoint(eager=False)
+    ).cache()
     big = bg.groupBy("w1", "w2").agg(F.count(F.lit(1)).alias("c2"))
     # context counts derive from the bigram counts (c1(w1) = Σ_w2
     # c2(w1, w2), exactly equal): aggregate the KB-sized model frame
@@ -134,12 +134,12 @@ def ccnet_perplexity_buckets(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .select("doc_id", F.expr("negsum div n").alias("score"))
     )
-    # binned feeds both the histogram and the final bucket rollup
+    # cached: binned feeds both the histogram and the final bucket rollup
     binned = scored.select(
         "doc_id",
         F.expr(f"score div {_CCNET_BIN_E6}").alias("bin"),
         "score",
-    ).localCheckpoint(eager=False)
+    ).cache()
     hist = binned.groupBy("bin").agg(F.count(F.lit(1)).alias("nb"))
     w_cum = Window.orderBy("bin").rowsBetween(
         Window.unboundedPreceding, Window.currentRow
@@ -272,10 +272,9 @@ def dsir_importance_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     b_count = _DSIR_BUCKETS
     docs = load_table(spark, sf_dir, "documents")
-    # lazy localCheckpoint: the exploded token frame feeds BOTH the
-    # bucket model and the per-doc scoring join — without the cut the
-    # corpus-wide explode runs twice (r6 advice; triangle_counts_parts
-    # precedent)
+    # cached: the exploded token frame feeds BOTH the bucket model and
+    # the per-doc scoring join — unpinned, the corpus-wide explode runs
+    # twice
     feat = docs.select(
         "doc_id",
         "lang",
@@ -284,7 +283,7 @@ def dsir_importance_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
         "doc_id",
         "lang",
         (md5_prefix_long(F.col("term")) % b_count).alias("b"),
-    ).localCheckpoint(eager=False)
+    ).cache()
     is_t = F.col("lang") == _DSIR_TARGET_LANG
     per_bucket = feat.groupBy("b").agg(
         F.count(F.lit(1)).alias("cs"),
@@ -410,10 +409,11 @@ def bpe_train_merges(spark: SparkSession, sf_dir: str) -> DataFrame:
     pair of round r stays in the plan as a broadcast 1-row frame that
     both (a) parameterizes the vocabulary rewrite via column-valued
     ``replace`` patterns and (b) contributes the output row. Both the
-    vocabulary (M rows) and the argmax (1 row) are lazily
-    ``localCheckpoint``ed per round — without the cut, round r's plan
-    re-embeds rounds 1..r-1 twice over (the vocab feeds both the pair
-    count and the next rewrite), going exponential in rounds.
+    vocabulary (M rows) and the argmax (1 row) are ``localCheckpoint``ed
+    per round — without the cut, round r's plan re-embeds rounds 1..r-1
+    twice over (the vocab feeds both the pair count and the next
+    rewrite), going exponential in rounds. With AQE on, each checkpoint
+    runs the shuffle stages below it while the loop builds the plan.
 
     The symbol string format (``" k e y "``: space-wrapped,
     space-separated) and the 2-pass ``replace(' a b ', ' ab ')`` rewrite

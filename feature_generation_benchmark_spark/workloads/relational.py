@@ -721,9 +721,8 @@ def approx_users_per_type_check(
     ev = load_table(spark, sf_dir, "events").select(
         "event_type", "user_id", _cents("value").alias("cents")
     )
-    # lazy localCheckpoint (the kmeans idiom): est feeds BOTH the rank
-    # join and the final projection — without the cut the full-scan
-    # sketch aggregate runs twice per gate run (r6 session-3 review)
+    # cached: est feeds BOTH the rank join and the final projection —
+    # unpinned, the full-scan sketch aggregate runs twice per gate run
     est = (
         approx_users_per_type(spark, sf_dir)
         # prune the raw-gate scaffolding (n_rows/min/max): the rank join
@@ -733,7 +732,7 @@ def approx_users_per_type_check(
             "event_type", "n_users_approx",
             "p50_value_cents", "p99_value_cents",
         )
-        .localCheckpoint(eager=False)
+        .cache()
     )
     exact = ev.groupBy("event_type").agg(
         F.countDistinct("user_id").alias("n_users")

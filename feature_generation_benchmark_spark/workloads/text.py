@@ -424,12 +424,9 @@ def top_ngram_coverage(spark: SparkSession, sf_dir: str) -> DataFrame:
     The reference has no repetition surface at all (its text model stops
     at the bank-transaction schema, `docs/index.md`)."""
     docs = load_table(spark, sf_dir, "documents")
-    # lazy localCheckpoint: the token-array frame feeds BOTH gram
-    # explosions and the n_tokens base — without the cut the corpus
-    # tokenize runs three times (r7; the ccnet precedent)
-    toked = docs.select("doc_id", tokens("text").alias("toks")).localCheckpoint(
-        eager=False
-    )
+    # cached: the token-array frame feeds BOTH gram explosions and the
+    # n_tokens base — unpinned, the corpus tokenize runs three times
+    toked = docs.select("doc_id", tokens("text").alias("toks")).cache()
     grams = _gram_rows(toked, 2).unionByName(_gram_rows(toked, 3))
     top = (
         grams.groupBy("doc_id", "g", "gram")
@@ -523,14 +520,13 @@ def unigram_logprob(spark: SparkSession, sf_dir: str) -> DataFrame:
     portable, and the quantization removes the dominant order-of-
     accumulation hazard)."""
     docs = load_table(spark, sf_dir, "documents")
-    # lazy localCheckpoint: the exploded token frame feeds the unigram
-    # model AND the scoring join, and the vocab-sized model feeds both
-    # the total and the join — without the cuts the corpus
-    # tokenize+explode ran THREE times per run (r7 plan sweep; the
-    # bigram_logprob precedent, guide §2.4)
+    # cached: the exploded token frame feeds the unigram model AND the
+    # scoring join, and the vocab-sized model feeds both the total and
+    # the join — unpinned, the corpus tokenize+explode ran THREE times
+    # per run (r7 plan sweep)
     tok = docs.select(
         "doc_id", F.explode(tokens("text")).alias("token")
-    ).localCheckpoint(eager=False)
+    ).cache()
     freq = tok.groupBy("token").agg(F.count(F.lit(1)).alias("c")).cache()
     total = freq.agg(F.sum("c").alias("total"))
     micro = (
@@ -800,12 +796,11 @@ def bigram_logprob(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.slice("t", 2, F.size("t") - 1),
         lambda a, b: F.struct(a.alias("w1"), b.alias("w2")),
     )
-    # lazy localCheckpoint: the exploded bigram frame feeds the bigram
-    # model AND the scoring join — without the cut the corpus
-    # tokenize+explode runs twice (r7 optimization; the ccnet precedent)
+    # cached: the exploded bigram frame feeds the bigram model AND the
+    # scoring join — unpinned, the corpus tokenize+explode runs twice
     bg = toks.select("doc_id", F.explode(pairs).alias("p")).select(
         "doc_id", "p.w1", "p.w2"
-    ).localCheckpoint(eager=False)
+    ).cache()
     big = bg.groupBy("w1", "w2").agg(F.count(F.lit(1)).alias("c2"))
     # context counts DERIVE from the bigram counts (c1(w1) = Σ_w2
     # c2(w1, w2) — exactly equal by definition): aggregate the KB-sized

@@ -48,6 +48,35 @@ def _physical(df) -> str:
     return df._jdf.queryExecution().executedPlan().toString()
 
 
+def _operators(df) -> list[str]:
+    """One-line descriptions of the operators in ``df``'s executed plan.
+    A cached relation's plan is listed once however many scans read it
+    (the plan printer repeats it under every scan)."""
+    builders, out = [], []
+
+    def walk(node):
+        name = node.getClass().getSimpleName()
+        if name == "AdaptiveSparkPlanExec":
+            walk(node.executedPlan())
+            return
+        if name.endswith("QueryStageExec"):
+            walk(node.plan())
+            return
+        if name == "InMemoryTableScanExec":
+            builder = node.relation().cacheBuilder()
+            if not any(builder.equals(b) for b in builders):
+                builders.append(builder)
+                walk(builder.cachedPlan())
+            return
+        out.append(node.simpleString(10_000))
+        kids = node.children()
+        for i in range(kids.size()):
+            walk(kids.apply(i))
+
+    walk(df._jdf.queryExecution().executedPlan())
+    return out
+
+
 def test_case_when_is_single_shuffle(spark, spec, trx_path):
     plan = _physical(compile_case_when(spec, spark.read.parquet(trx_path)))
     assert plan.count("Exchange hashpartitioning") == 1, plan
@@ -467,9 +496,10 @@ def test_feature_eng_plan_shapes(spark):
     assert p.count("Exchange hashpartitioning") == 1, p
     p = _plan_of(features_eng.heavy_hitters, spark)
     assert p.count("Exchange hashpartitioning") == 2, p
-    p = _plan_of(features_eng.tfidf_top_terms, spark)
-    assert p.count("Exchange hashpartitioning") <= 4, p
-    assert "CartesianProduct" not in p, p
+    ops = _operators(features_eng.tfidf_top_terms(spark, SF_SMOKE))
+    exchanges = [op for op in ops if op.startswith("Exchange hashpartitioning")]
+    assert len(exchanges) <= 4, ops
+    assert not any(op.startswith("CartesianProduct") for op in ops), ops
 
 
 def test_fuzzy_linkage_is_blocked_equi_join(spark):
@@ -798,10 +828,33 @@ def test_bigram_models_derive_context_from_bigram_counts(spark):
     )
     from tests.conftest import SF_SMOKE
 
-    plan = _physical(bigram_logprob(spark, SF_SMOKE))
-    # one corpus-keyed explode feeding the checkpointed frame; the plan
-    # downstream of the checkpoint must not re-tokenize documents
-    assert plan.count("documents.parquet") == 0, plan
+    ops = _operators(bigram_logprob(spark, SF_SMOKE))
+    # one corpus-keyed explode feeding the cached frame; the plan
+    # downstream of the cache must not scan documents again
+    assert sum("documents.parquet" in op for op in ops) == 1, ops
+
+
+@pytest.mark.parametrize("name", ["dedup_minhash_lsh_raw", "dedup_simhash"])
+def test_gated_dedup_twins_tokenize_once(spark, name):
+    """The gated twins pin the pipeline's doc-sized frame and read their
+    eligibility off it, so the corpus is tokenized once per row. The
+    corpus is a two-leg union (documents + planted clones) and Catalyst
+    pushes the tokenizing projection into each leg: once per row is two
+    operators."""
+    from feature_generation_benchmark_spark.session import cache_scope
+    from feature_generation_benchmark_spark.workloads import registry
+    from tests.conftest import SF_SMOKE
+
+    with cache_scope(spark):
+        ops = _operators(registry()[name].fn(spark, SF_SMOKE))
+    # the canonical tokenizer (functions/textfns.py::tokens) as it prints;
+    # a scan's DataFilters only list pushdown candidates, which parquet
+    # does not evaluate
+    tokenizers = [
+        op for op in ops
+        if "split(lower(text" in op and not op.startswith("FileScan")
+    ]
+    assert len(tokenizers) == 2, ops
 
 
 def test_jaccard_prefix_reads_sizes_off_verification_arrays(spark):

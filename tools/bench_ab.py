@@ -1,22 +1,31 @@
 #!/usr/bin/env python
-"""Controlled re-measure of suspected bench regressions (r5 verdict #3).
+"""Interleaved re-measure of chosen queries on the bench's own sink.
 
-One Spark session, median-of-N per query, queries interleaved round-robin
-(so slow host phases hit all queries equally, not whichever ran last),
-host probes before/after. Prints one JSON line per query plus a summary.
+One Spark session with ``bench.py``'s warm-up; each query is timed with
+``bench.timed_write`` (read → compute → parquet write, pins released
+outside the timed region), round-robin N times so a slow host phase hits
+every query equally; host probes before/after. Prints one JSON line.
+
+For a parent/change A/B, run the same file against each checkout in
+alternation — each pair of processes is one pair of samples:
+
+    python <parent>/tools/bench_ab.py 1 q ...
+    python <change>/tools/bench_ab.py 1 q ...
 
 Usage: python tools/bench_ab.py [N] [query ...]
-Defaults: N=5, the four r5-flagged queries + two stable controls.
+Defaults: N=5, four iterative/embedding queries + two stable controls.
 """
 
 from __future__ import annotations
 
 import json
+import os
+import shutil
 import statistics
 import sys
-import time
+import tempfile
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 DEFAULT_QUERIES = [
     "kmeans_embeddings",
@@ -32,10 +41,9 @@ DEFAULT_QUERIES = [
 def main() -> None:
     n = int(sys.argv[1]) if len(sys.argv) > 1 else 5
     names = sys.argv[2:] or DEFAULT_QUERIES
-    import os
-
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
+    from bench import timed_write, warm
     from feature_generation_benchmark_spark.hostprobe import (
         io_cache_probe,
         single_core_probe_sec,
@@ -46,19 +54,16 @@ def main() -> None:
     io_probe = io_cache_probe(sf_dir)
     probe_before = single_core_probe_sec()
     spark = get_spark("bench-ab")
+    warm(spark, sf_dir)
     reg = registry()
-    fns = {q: reg[q].fn for q in names}
-
-    # one warm pass (parquet footers, page cache, codegen) outside timing
-    for q in names:
-        fns[q](spark, sf_dir).count()
+    out_root = tempfile.mkdtemp(prefix="fgb_bench_ab_")
 
     times: dict[str, list[float]] = {q: [] for q in names}
     for _ in range(n):
         for q in names:
-            t0 = time.time()
-            fns[q](spark, sf_dir).count()
-            times[q].append(time.time() - t0)
+            out = os.path.join(out_root, q)
+            times[q].append(timed_write(spark, reg[q].fn, sf_dir, out))
+    shutil.rmtree(out_root, ignore_errors=True)
     probe_after = single_core_probe_sec()
 
     out = {
@@ -72,6 +77,7 @@ def main() -> None:
                 "median": round(statistics.median(ts), 3),
                 "min": round(min(ts), 3),
                 "max": round(max(ts), 3),
+                "runs": ts,
             }
             for q, ts in times.items()
         },

@@ -32,8 +32,7 @@ NOISE-PROOF PROTOCOL (round 3 — this host's deliverable CPU swings up to
 
 Env: ``SPARK_GRAFT_REPS``, ``SPARK_GRAFT_DATA_CACHE``,
 ``SPARK_GRAFT_KEEP_CACHE=0`` to delete after the run,
-``SPARK_GRAFT_INIT_PARTITION_FACTOR`` (session.py) for the
-initialPartitionNum A/B.
+``SPARK_GRAFT_EXTRA_CONF`` (session.py) for an initialPartitionNum A/B.
 """
 
 from __future__ import annotations

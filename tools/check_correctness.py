@@ -100,6 +100,7 @@ def main() -> int:
     only = set(sys.argv[2:])
 
     import __spark_entry__ as e
+    from feature_generation_benchmark_spark.session import cache_scope
 
     # Mirror the driver: a VANILLA session (no engine confs) — catches any
     # query that silently depends on get_spark()'s profile (nanosAsLong,
@@ -132,14 +133,12 @@ def main() -> int:
     for name, fn in qs.items():
         if only and name not in only:
             continue
-        t0 = time.time()
-        sdf = fn(spark, sf_dir)
-        spark_pdf = sdf.toPandas()
-        t_spark = time.time() - t0
-        # release intra-query caches (dedup/graph operators .cache() and
-        # assign cleanup to the session owner) — a full 189-query gate
-        # run otherwise pins every cached frame simultaneously
-        spark.catalog.clearCache()
+        # the scope releases the query's pins: a full gate run otherwise
+        # holds every cached frame at once
+        with cache_scope(spark):
+            t0 = time.time()
+            spark_pdf = fn(spark, sf_dir).toPandas()
+            t_spark = time.time() - t0
         n_spark = len(spark_pdf)
         if name not in oracles:
             print(f"{name}: rows={n_spark} (rows-only, no oracle) "

@@ -1,9 +1,10 @@
 """Isolate and time single queries with the noop sink (guide §1.4).
 
 Times the COMPUTATION (noop sink evaluates every column of every row,
-no output write) with a warm session, N repetitions, caches cleared
-between runs — the per-query microscope the suite bench (which times
-the reference protocol: compute + parquet write) cannot be.
+no output write) with a warm session, N repetitions, each run's pins
+released between runs — the per-query microscope the suite bench
+(which times the reference protocol: compute + parquet write) cannot
+be.
 
 Usage:
     python tools/profile_query.py query [query ...]        # 3 reps each
@@ -16,8 +17,6 @@ import os
 import sys
 import time
 
-import pandas as pd  # module-level: pandas_udf type-hint resolution needs it
-
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 
@@ -26,32 +25,23 @@ def main() -> None:
     reps = int(os.environ.get("PROFILE_REPS", "3"))
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
-    from feature_generation_benchmark_spark.session import get_spark
+    from bench import warm
+    from feature_generation_benchmark_spark.session import cache_scope, get_spark
     from feature_generation_benchmark_spark.workloads import registry
 
     spark = get_spark("fgb-profile")
     reg = registry()
-
-    # same warmups as bench.py: JVM, parquet footers, Python worker pool
-    spark.read.parquet(f"{sf_dir}/events.parquet").count()
-    from pyspark.sql import functions as F
-    from pyspark.sql.functions import pandas_udf
-
-    @pandas_udf("double")
-    def _warm(v: pd.Series) -> pd.Series:
-        return v
-
-    spark.range(64).select(_warm(F.col("id").cast("double"))).count()
+    warm(spark, sf_dir)
 
     for name in names:
         fn = reg[name].fn
         times = []
         for _ in range(reps):
             spark.sparkContext.setJobDescription(f"profile: {name}")
-            t0 = time.time()
-            fn(spark, sf_dir).write.format("noop").mode("overwrite").save()
-            times.append(round(time.time() - t0, 3))
-            spark.catalog.clearCache()
+            with cache_scope(spark):
+                t0 = time.time()
+                fn(spark, sf_dir).write.format("noop").mode("overwrite").save()
+                times.append(round(time.time() - t0, 3))
         print(f"{name}: {times} min={min(times)}")
 
 
